@@ -7,9 +7,11 @@ K-means/src/main/java/wc/CountFollowers.java:36-41). This module is the
 engine's replacement: explicit schemas, one loader, and the derived
 graph views every graph workload shares.
 
-Scale notes: tables load straight from parquet (columnar, splittable,
-self-describing); filters/projections applied by callers reach the scan
-via Catalyst pushdown — verified in tests with ``.explain``.
+Scale notes: tables load straight from parquet (columnar, splittable)
+with their schema bound from ``TABLE_SCHEMAS``, so building a table's
+DataFrame reads no file footer and launches no schema-inference job;
+filters/projections applied by callers reach the scan via Catalyst
+pushdown — verified in tests with ``.explain``.
 """
 
 from __future__ import annotations
@@ -18,9 +20,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Schemas of the driver-generated fixtures (TESTDATA.md). Parquet is
-# self-describing; these are the declared contract used for validation
-# and for the CSV ingestion path (sources/).
+# Schemas of the driver-generated fixtures (TESTDATA.md), bound at every
+# ``load_table`` in place of parquet schema inference. They must equal the
+# schema Spark infers from the files (tests/test_catalog.py pins this at
+# every fixture scale), or binding would change a column's type. The
+# fixtures store timestamps as TIMESTAMP(MICROS, isAdjustedToUTC=false),
+# which Spark reads as ``TimestampNTZType``.
 TABLE_SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
         [
@@ -68,7 +73,7 @@ TABLE_SCHEMAS: dict[str, T.StructType] = {
             T.StructField("o_custkey", T.LongType()),
             T.StructField("o_orderstatus", T.StringType()),
             T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.TimestampType()),
+            T.StructField("o_orderdate", T.TimestampNTZType()),
             T.StructField("o_orderpriority", T.StringType()),
         ]
     ),
@@ -84,13 +89,13 @@ TABLE_SCHEMAS: dict[str, T.StructType] = {
             T.StructField("l_tax", T.DoubleType()),
             T.StructField("l_returnflag", T.StringType()),
             T.StructField("l_linestatus", T.StringType()),
-            T.StructField("l_shipdate", T.TimestampType()),
+            T.StructField("l_shipdate", T.TimestampNTZType()),
         ]
     ),
     "events": T.StructType(
         [
             T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
+            T.StructField("ts", T.TimestampNTZType()),
             T.StructField("user_id", T.LongType()),
             T.StructField("event_type", T.StringType()),
             T.StructField("value", T.DoubleType()),
@@ -119,15 +124,15 @@ TABLE_NAMES = tuple(TABLE_SCHEMAS)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table. Parquet scan → full pushdown support."""
+    """Load one fixture table. Parquet scan → full pushdown support.
+
+    The schema is bound, not inferred: no Spark job runs here. A file
+    whose physical types disagree with ``TABLE_SCHEMAS`` (for instance
+    TIMESTAMP(NANOS) timestamps) fails the first action that scans it
+    with ``PARQUET_COLUMN_DATA_TYPE_MISMATCH``, never reads back wrong."""
     if name not in TABLE_SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {sorted(TABLE_SCHEMAS)}")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # TIMESTAMP(NANOS) read as long nanos (see session.py); convert to
-        # microsecond TimestampType, truncating toward zero like the writer.
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------

@@ -35,8 +35,11 @@ def iterate(
     """Run ``step`` until ``converged`` or ``max_iter``.
 
     ``step(state, i)`` returns the next state; ``converged(old, new)``
-    (optional) is evaluated after each step — it may run Spark actions
-    (e.g. a diff-count join, SingleSourceShortestPathRDD/.../
+    (optional) is evaluated after each step except the final one — the
+    loop ends there regardless, so iteration ``max_iter - 1`` is never
+    checked and a loop that stops at ``max_iter`` does not report
+    whether it converged. ``converged`` may run Spark actions (e.g. a
+    diff-count join, SingleSourceShortestPathRDD/.../
     FollowerCount.scala:42-44).
 
     ``check_every`` (r14, guide §1.2 "per-task work" → fewer control

@@ -47,11 +47,8 @@ class QuerySpec:
 REGISTRY: dict[str, QuerySpec] = {}
 
 # Runtime SQL confs every query needs regardless of who built the
-# SparkSession (the driver passes its own). Both are runtime-settable.
+# SparkSession (the driver passes its own). All are runtime-settable.
 _REQUIRED_CONFS = {
-    # events.parquet carries TIMESTAMP(NANOS); without this the scan throws
-    # PARQUET_TYPE_ILLEGAL. The catalog converts the long nanos back.
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # parquet NTZ timestamps must mean the same instant as DuckDB's naive
     # timestamps (oracle parity), so pin the session zone.
     "spark.sql.session.timeZone": "UTC",

@@ -59,9 +59,6 @@ def get_spark(
         .master(master)
         # --- correctness-critical ---
         .config("spark.sql.session.timeZone", "UTC")
-        # events.parquet carries TIMESTAMP(NANOS); read as long nanos and
-        # convert in the catalog (Spark has no nanos timestamp type)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # --- adaptive execution: the engine's answer to hand-tuning ---
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..catalog import load_table
 from ..functions.sketch import KMV_K
 from ..plans.iterate import loop_conf
 
@@ -42,18 +43,22 @@ def _drain_partitions(default: int = 8) -> int:
     handful to a few thousand keys of state). Production deployments
     size it to arrival volume via $SPARK_GRAFT_STREAM_SHUFFLE; the
     state-store count is pinned at checkpoint creation, so this is a
-    per-stream design constant, not a host tunable."""
-    return int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", str(default)))
+    per-stream design constant, not a host tunable. A value that is not
+    an integer falls back to ``default``; the result is at least 1."""
+    raw = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "")
+    try:
+        width = int(raw)
+    except ValueError:
+        width = default
+    return max(1, width)
 
-# Raw schema the file-stream source reads events.parquet with. NOTE the
-# unit asymmetry with the batch path: the parquet column is
-# TIMESTAMP(NANOS), and the *batch* reader (with the legacy nanosAsLong
-# conf, see session.py) surfaces it as long NANOseconds — but the
-# *streaming* reader with this explicit LongType schema coerces through
-# Spark's native microsecond timestamp first, so ``ts`` arrives here as
-# long MICROseconds. stream_events must therefore NOT reuse the batch
-# catalog's ``ts div 1000`` recipe (doing so put every event in Jan 1970
-# — caught by test_streaming_window_agg_matches_batch).
+# Raw schema the file-stream source reads events.parquet with. The
+# parquet column is TIMESTAMP(MICROS, isAdjustedToUTC=false); read with
+# this explicit LongType schema it arrives as long MICROseconds, which
+# stream_events turns back into a timestamp. The batch catalog binds the
+# same column as TimestampNTZType instead;
+# tests/test_pipeline.py::test_streaming_timestamp_magnitude_matches_batch
+# pins the two paths' min(ts) equal (a unit slip moves every event ~1000×).
 EVENTS_RAW_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -109,8 +114,7 @@ def stream_events(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     raw = reader.load(sf_dir)
-    # ts is long MICROseconds on the streaming path (see EVENTS_RAW_SCHEMA
-    # note) — no div 1000 here, unlike catalog.load_table's batch recipe.
+    # ts is long MICROseconds on the streaming path (see EVENTS_RAW_SCHEMA)
     events = raw.withColumn("ts", F.timestamp_micros(F.col("ts")))
     return events.withWatermark("ts", watermark)
 
@@ -984,8 +988,6 @@ def run_enriched_totals_to_memory(
 ) -> None:
     """Drain the bounded events source through the stream-static join
     into a complete-mode memory sink (availableNow backfill)."""
-    from ..catalog import load_table
-
     agg = enriched_segment_totals(
         stream_events(spark, sf_dir), load_table(spark, sf_dir, "customer")
     )
@@ -1068,7 +1070,7 @@ def run_incident_counts_stream_to_memory(
     foreachBatch upsert. Same shape at 100 TB: the band explode keeps
     the static side ≤2 rows per incident, and no micro-batch ever
     nested-loops against the incident table."""
-    ev_batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev_batch = load_table(spark, sf_dir, "events")
     inc = (
         ev_batch.where(F.col("event_type") == "error")
         .select(

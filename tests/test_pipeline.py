@@ -846,10 +846,11 @@ def test_stream_stream_join_matches_batch(spark, sf_dir):
 
 def test_streaming_timestamp_magnitude_matches_batch(spark, sf_dir):
     """Unit guard for the stream source's timestamp conversion: the
-    streaming reader (explicit LongType schema) delivers MICROseconds
-    while the batch reader (nanosAsLong) delivers NANOseconds; a wrong
-    recipe on either side shifts every event ~1000× (into Jan 1970).
-    Pin min(ts) equal across both paths so the bug can't come back."""
+    streaming reader (explicit LongType schema) delivers long
+    MICROseconds that stream_events converts, while the batch catalog
+    binds the column as TimestampNTZType; a wrong unit on either side
+    shifts every event ~1000× (into Jan 1970). Pin min(ts) equal across
+    both paths so the bug can't come back."""
     stream_src = SW.stream_events(spark, sf_dir)
     q = (
         stream_src.groupBy()

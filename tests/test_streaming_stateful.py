@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreducelearnings_spark.catalog import load_table
@@ -681,3 +682,14 @@ def test_streaming_lsh_drain_is_single_data_batch(spark, sf_dir):
     data_batches = [p for p in progress if p["numInputRows"] > 0]
     assert len(data_batches) == 1
     assert len(progress) <= 2
+
+
+@pytest.mark.parametrize(
+    "raw, width", [("abc", 8), ("0", 1), ("-3", 1), ("", 8), ("12", 12)]
+)
+def test_drain_partitions_env_override_is_validated(monkeypatch, raw, width):
+    """A malformed $SPARK_GRAFT_STREAM_SHUFFLE must not crash a drain or
+    configure zero/negative shuffle partitions: non-integers fall back
+    to the default and the width is clamped to at least 1."""
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", raw)
+    assert SW._drain_partitions() == width
